@@ -2,6 +2,6 @@
 
 These modules import nothing from pyspark — they are the deterministic,
 single-threaded ground truth. The Spark pipeline wraps them in Arrow-batched
-``mapInPandas`` stages; the golden-file tests run them directly and require
+``mapInArrow`` stages; the golden-file tests run them directly and require
 byte-identical output from both paths.
 """

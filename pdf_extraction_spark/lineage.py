@@ -211,8 +211,9 @@ def run_resumable(
         wall_ex = time.monotonic() - t_ex
 
         # metrics read-back: column-pruned, partition-pruned scan of the
-        # just-written wave
-        out = spark.read.parquet(docs_path).filter(
+        # just-written wave. The sink's own schema is given, not inferred:
+        # a wave of empty buckets writes no parquet file to infer it from.
+        out = spark.read.schema(extracted.schema).parquet(docs_path).filter(
             F.col("bucket").isin(*[int(b) for b in wave])
         )
         stats = {

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpus import spread_docs
+from ..pipeline import arrow_map
 from .common import tbl
 from .textops import QUALITY_EXPR_SQL
 
@@ -847,9 +848,6 @@ def q_indexable_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical target; only the canonical copy is kept). The metadata comes
     out of one Arrow extraction pass; the verdict itself is JVM column
     algebra, so at 10^12 docs this is a narrow map with zero shuffle."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     from ..kernels.html_extract import extract_html
     from ..kernels.urlnorm import resolve_link
 
@@ -857,32 +855,23 @@ def q_indexable_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "url": [], "robots": [], "canonical": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                if i % 5 == 0:
-                    head = "<meta name='robots' content='noindex, follow'>"
-                elif i % 7 == 0:
-                    head = "<link rel='canonical' href='/other'>"
-                else:
-                    head = f"<link rel='canonical' href='/doc/{i}'>"
-                meta = extract_html(
-                    f"<html><head>{head}</head><body><p>x</p></body></html>"
-                )["meta"]
-                canon = meta.get("canonical")
-                rows["doc_id"].append(i)
-                rows["url"].append(url)
-                rows["robots"].append(meta.get("robots"))
-                rows["canonical"].append(
-                    resolve_link(url, canon) if canon else None
-                )
-            yield pd.DataFrame(rows)
+    def row(i, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        if i % 5 == 0:
+            head = "<meta name='robots' content='noindex, follow'>"
+        elif i % 7 == 0:
+            head = "<link rel='canonical' href='/other'>"
+        else:
+            head = f"<link rel='canonical' href='/doc/{i}'>"
+        meta = extract_html(
+            f"<html><head>{head}</head><body><p>x</p></body></html>"
+        )["meta"]
+        canon = meta.get("canonical")
+        yield (i, url, meta.get("robots"),
+               resolve_link(url, canon) if canon else None)
 
-    m = docs.mapInPandas(
-        gen, schema="doc_id long, url string, robots string, canonical string"
+    m = arrow_map(
+        docs, row, "doc_id long, url string, robots string, canonical string"
     )
     noindex = F.coalesce(F.col("robots"), F.lit("")).contains("noindex")
     non_canon = F.col("canonical").isNotNull() & (
@@ -970,47 +959,35 @@ def q_warc_http_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     every crawl pipeline applies before extraction. One Arrow pass."""
     import io
 
-    import pandas as pd
-
     from ..sources.warc import http_envelope_meta, iter_warc_records
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "status": [], "content_type": [],
-                    "keep": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                status = 404 if i % 4 == 0 else 200
-                ctype = "application/pdf" if i % 5 == 0 else "text/html"
-                body = b"<html><body>x</body></html>"
-                http = (
-                    b"HTTP/1.1 %d X\r\nContent-Type: %s; charset=utf-8\r\n\r\n"
-                    % (status, ctype.encode())
-                ) + body
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: response\r\n"
-                    b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
-                    b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
-                    b"WARC-Target-URI: https://%s.example.com/doc/%d\r\n"
-                    b"Content-Length: %d\r\n\r\n"
-                    % (i, str(source).encode(), i, len(http))
-                ) + http + b"\r\n\r\n"
-                for headers, payload in iter_warc_records(io.BytesIO(rec)):
-                    st, ct = http_envelope_meta(payload)
-                    rows["doc_id"].append(i)
-                    rows["status"].append(st)
-                    rows["content_type"].append(ct)
-                    rows["keep"].append(st == 200 and ct == "text/html")
-            yield pd.DataFrame(rows)
+    def row(i, source):
+        status = 404 if i % 4 == 0 else 200
+        ctype = "application/pdf" if i % 5 == 0 else "text/html"
+        body = b"<html><body>x</body></html>"
+        http = (
+            b"HTTP/1.1 %d X\r\nContent-Type: %s; charset=utf-8\r\n\r\n"
+            % (status, ctype.encode())
+        ) + body
+        rec = (
+            b"WARC/1.0\r\n"
+            b"WARC-Type: response\r\n"
+            b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
+            b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
+            b"WARC-Target-URI: https://%s.example.com/doc/%d\r\n"
+            b"Content-Length: %d\r\n\r\n"
+            % (i, str(source).encode(), i, len(http))
+        ) + http + b"\r\n\r\n"
+        for _headers, payload in iter_warc_records(io.BytesIO(rec)):
+            st, ct = http_envelope_meta(payload)
+            yield i, st, ct, st == 200 and ct == "text/html"
 
-    return docs.mapInPandas(
-        gen,
-        schema="doc_id long, status int, content_type string, keep boolean",
+    return arrow_map(
+        docs, row, "doc_id long, status int, content_type string, keep boolean"
     )
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..corpus import spread_docs
 from ..kernels import pdf_write
-from ..pipeline import extract_corpus
+from ..pipeline import arrow_map, extract_corpus
 from .common import first_words
 
 
@@ -193,25 +193,18 @@ def q_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
 
-    def _cells(batches):
-        from ..kernels import pdf_extract as px
+    from ..kernels import pdf_extract as px
 
-        for pdf in batches:
-            out = {"doc_id": [], "cell_row": [], "cell_col": [], "cell_text": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = first_words(text, 9)
-                rows = [words[0:3], words[3:6], words[6:9]]
-                payload = pdf_write.build_pdf("", table_rows=rows)
-                for t in px.extract_table_cells(payload):
-                    for c in t["cells"]:
-                        out["doc_id"].append(int(doc_id))
-                        out["cell_row"].append(c["row"])
-                        out["cell_col"].append(c["col"])
-                        out["cell_text"].append(c["text"])
-            yield pd.DataFrame(out)
+    def row(doc_id, text):
+        words = first_words(text, 9)
+        rows = [words[0:3], words[3:6], words[6:9]]
+        payload = pdf_write.build_pdf("", table_rows=rows)
+        for t in px.extract_table_cells(payload):
+            for c in t["cells"]:
+                yield doc_id, c["row"], c["col"], c["text"]
 
-    return docs.mapInPandas(
-        _cells, schema="doc_id long, cell_row int, cell_col int, cell_text string"
+    return arrow_map(
+        docs, row, "doc_id long, cell_row int, cell_col int, cell_text string"
     )
 
 
@@ -315,53 +308,38 @@ def q_html_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
 
-    def _cells(batches):
-        from ..kernels import html_extract as hx
+    from ..kernels import html_extract as hx
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "cell_row": [], "cell_col": [],
-                "rowspan": [], "colspan": [], "is_header": [], "cell_text": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 9)
-                if i % 3 == 0:
-                    body = (
-                        f"<tr><th rowspan=2>{w[0]}</th><th>{w[1]}</th>"
-                        f"<th>{w[2]}</th></tr>"
-                        f"<tr><td>{w[3]}</td><td>{w[4]}</td></tr>"
-                        f"<tr><td colspan=\"2\">{w[5]}</td><td>{w[6]}</td></tr>"
-                    )
-                else:
-                    rows = [w[0:3], w[3:6], w[6:9]]
-                    body = "".join(
-                        "<tr>"
-                        + "".join(
-                            f"<{'th' if r == 0 else 'td'}>{c}</{'th' if r == 0 else 'td'}>"
-                            for c in row
-                        )
-                        + "</tr>"
-                        for r, row in enumerate(rows)
-                    )
-                html = f"<html><body><table>{body}</table></body></html>"
-                for t in hx.extract_html_tables(html):
-                    for c in t["cells"]:
-                        out["doc_id"].append(i)
-                        out["cell_row"].append(c["row"])
-                        out["cell_col"].append(c["col"])
-                        out["rowspan"].append(c["rowspan"])
-                        out["colspan"].append(c["colspan"])
-                        out["is_header"].append(c["header"])
-                        out["cell_text"].append(c["text"])
-            yield pd.DataFrame(out)
+    def row(i, text):
+        w = first_words(text, 9)
+        if i % 3 == 0:
+            body = (
+                f"<tr><th rowspan=2>{w[0]}</th><th>{w[1]}</th>"
+                f"<th>{w[2]}</th></tr>"
+                f"<tr><td>{w[3]}</td><td>{w[4]}</td></tr>"
+                f"<tr><td colspan=\"2\">{w[5]}</td><td>{w[6]}</td></tr>"
+            )
+        else:
+            rows = [w[0:3], w[3:6], w[6:9]]
+            body = "".join(
+                "<tr>"
+                + "".join(
+                    f"<{'th' if r == 0 else 'td'}>{c}</{'th' if r == 0 else 'td'}>"
+                    for c in cells
+                )
+                + "</tr>"
+                for r, cells in enumerate(rows)
+            )
+        html = f"<html><body><table>{body}</table></body></html>"
+        for t in hx.extract_html_tables(html):
+            for c in t["cells"]:
+                yield (i, c["row"], c["col"], c["rowspan"], c["colspan"],
+                       c["header"], c["text"])
 
-    return docs.mapInPandas(
-        _cells,
-        schema=(
-            "doc_id long, cell_row int, cell_col int, rowspan int, "
-            "colspan int, is_header boolean, cell_text string"
-        ),
+    return arrow_map(
+        docs, row,
+        ("doc_id long, cell_row int, cell_col int, rowspan int, "
+         "colspan int, is_header boolean, cell_text string"),
     )
 
 

@@ -5,8 +5,8 @@ graphs (quality/spam features a la OPIC/harmonic centrality), and URL
 dedup. The reference has no link path at all (its inputs are local files);
 this is the Spark-first rebuild over the corpus table:
 
-* the Arrow-batched anchor/annotation kernel runs inside ``mapInPandas``
-  (one Python worker pass, no per-row UDF);
+* the anchor/annotation kernel runs in one Arrow-batched Python pass
+  (:func:`..pipeline.arrow_map`, no per-row UDF);
 * URL resolution (:mod:`..kernels.urlnorm`) happens in the same batch, so
   the shuffle only ever carries resolved targets;
 * the host-graph rollup is a plain map-side-combinable groupBy — at 10^12
@@ -21,13 +21,12 @@ cardinality is sub-linear in corpus size. No driver-side collection.
 from __future__ import annotations
 
 import re as _re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import corpus_from_documents, spread_docs
+from ..pipeline import arrow_map
 from .common import first_words, tbl
 
 _LINKS_SCHEMA = ("url string, href string, resolved string, "
@@ -40,36 +39,23 @@ def outlinks(corpus: DataFrame) -> DataFrame:
     (javascript:, mailto:, fragments) are dropped after resolution. The
     anchor text rides along because it is the web's oldest relevance
     signal — :func:`q_anchor_text_rollup` aggregates it per target."""
+    from ..kernels.dispatch import extract_document
+    from ..kernels.urlnorm import resolve_link
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.dispatch import extract_document
-        from ..kernels.urlnorm import resolve_link
+    def row(url, payload):
+        res = extract_document(payload)
+        # <base href> redirects relative resolution (itself resolved
+        # against the document URL, per HTML spec)
+        base = res["meta"].get("base") if res["meta"] else None
+        eff_base = (resolve_link(url, base) or url) if base else url
+        for lk in res["links"]:
+            tgt = resolve_link(eff_base, lk["href"])
+            if tgt is not None:
+                # PDF /Annots links carry no rel semantics -> nofollow False
+                yield (url, lk["href"], tgt, bool(lk["chrome"]),
+                       bool(lk.get("nofollow", False)), lk.get("text") or "")
 
-        for pdf in batches:
-            urls, hrefs, resolved, chrome, nofollow, anchors = [], [], [], [], [], []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                res = extract_document(payload)
-                # <base href> redirects relative resolution (itself resolved
-                # against the document URL, per HTML spec)
-                base = res["meta"].get("base") if res["meta"] else None
-                eff_base = (resolve_link(url, base) or url) if base else url
-                for lk in res["links"]:
-                    tgt = resolve_link(eff_base, lk["href"])
-                    if tgt is None:
-                        continue
-                    urls.append(url)
-                    hrefs.append(lk["href"])
-                    resolved.append(tgt)
-                    chrome.append(bool(lk["chrome"]))
-                    # PDF /Annots links carry no rel semantics -> False
-                    nofollow.append(bool(lk.get("nofollow", False)))
-                    anchors.append(lk.get("text") or "")
-            yield pd.DataFrame(
-                {"url": urls, "href": hrefs, "resolved": resolved,
-                 "chrome": chrome, "nofollow": nofollow, "anchor": anchors}
-            )
-
-    return corpus.select("url", "html").mapInPandas(gen, _LINKS_SCHEMA)
+    return arrow_map(corpus.select("url", "html"), row, _LINKS_SCHEMA)
 
 
 def q_extract_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,7 +87,7 @@ def q_anchor_text_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded, as ranking pipelines do. Map-side-combinable groupBy on
     (resolved, anchor) — cardinality is the target×vocabulary space, far
     below the edge count. Run standalone this re-extracts outlinks (Spark
-    cannot reuse a shuffle-free mapInPandas subtree across suite parts);
+    cannot reuse a shuffle-free Python map subtree across suite parts);
     a production pipeline materializes the outlinks table once and feeds
     every link-derived rollup from it."""
     lk = q_extract_outlinks(spark, sf_dir).filter(~F.col("nofollow"))
@@ -155,8 +141,6 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses (and dedup pipelines collapse the redirecting shell page onto
     its target). Docs with ``doc_id % 4 == 0`` carry no refresh and must
     emit nothing. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_html
     from ..kernels.urlnorm import resolve_link
 
@@ -164,42 +148,31 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "delay_s": [], "target": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                # the word lands in a URL PATH: keep only unreserved chars
-                # (RFC 3986) so URL-structural bytes can't change the
-                # parse — a trailing '?' is an empty query real resolution
-                # drops, ';'/''' would need quoting. Identity on the
-                # alnum driver corpus; the oracle mirrors the strip.
-                w0 = _re.sub(r"[^A-Za-z0-9._~-]", "", str(text).split(" ", 1)[0])
-                if w0 and set(w0) == {"."}:
-                    # '.'/'..' are RFC 3986 dot-segments and would be
-                    # normalized away (or climb a level) during resolution
-                    w0 = ""
-                frag = (
-                    "" if i % 4 == 0 else
-                    f"<meta http-equiv='refresh' content='{i % 7};url=/next/{w0}'>"
-                )
-                html = (
-                    f"<html><head>{frag}</head>"
-                    "<body><p>shell page body text</p></body></html>"
-                )
-                meta = extract_html(html)["meta"]
-                if meta.get("refresh_url") is None:
-                    continue
-                rows["doc_id"].append(i)
-                rows["delay_s"].append(meta["refresh_delay"])
-                rows["target"].append(resolve_link(url, meta["refresh_url"]))
-            yield pd.DataFrame(rows)
+    def row(i, text, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        # the word lands in a URL PATH: keep only unreserved chars
+        # (RFC 3986) so URL-structural bytes can't change the
+        # parse — a trailing '?' is an empty query real resolution
+        # drops, ';'/''' would need quoting. Identity on the
+        # alnum fixture corpus; the oracle mirrors the strip.
+        w0 = _re.sub(r"[^A-Za-z0-9._~-]", "", str(text).split(" ", 1)[0])
+        if w0 and set(w0) == {"."}:
+            # '.'/'..' are RFC 3986 dot-segments and would be
+            # normalized away (or climb a level) during resolution
+            w0 = ""
+        frag = (
+            "" if i % 4 == 0 else
+            f"<meta http-equiv='refresh' content='{i % 7};url=/next/{w0}'>"
+        )
+        html = (
+            f"<html><head>{frag}</head>"
+            "<body><p>shell page body text</p></body></html>"
+        )
+        meta = extract_html(html)["meta"]
+        if meta.get("refresh_url") is not None:
+            yield i, meta["refresh_delay"], resolve_link(url, meta["refresh_url"])
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, delay_s int, target string"
-    )
+    return arrow_map(docs, row, "doc_id long, delay_s int, target string")
 
 
 SQL_META_REFRESH = """
@@ -223,8 +196,6 @@ def q_image_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag, src resolved against the document URL. Chrome images (logos,
     banners) are flagged so downstream keeps only content figures. One
     Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_html_assets
     from ..kernels.urlnorm import resolve_link
 
@@ -232,45 +203,33 @@ def q_image_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "src": [], "alt": [],
-                    "chrome": [], "srcset_n": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                # words are ATTRIBUTE content: escape &/'/< so a word
-                # containing the quote delimiter cannot truncate the
-                # attribute (the kernel decodes entities back, so the
-                # parsed alt equals the raw words — what the oracle emits)
-                w = [
-                    x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
-                    for x in first_words(text, 4)
-                ]
-                html = (
-                    "<html><body>"
-                    "<nav><img src='/logo.png' alt='logo'></nav>"
-                    f"<main><img src='/img/{i}.jpg' alt='{w[0]} {w[1]}'"
-                    f" srcset='/img/{i}-1x.jpg 1x, /img/{i}-2x.jpg 2x'>"
-                    f"<img src='/img/{i}.png' alt='{w[2]} {w[3]}'></main>"
-                    "</body></html>"
-                )
-                for pos, a in enumerate(extract_html_assets(html)):
-                    if not a["src"]:
-                        continue
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["src"].append(resolve_link(url, a["src"]))
-                    rows["alt"].append(a["alt"])
-                    rows["chrome"].append(a["chrome"])
-                    rows["srcset_n"].append(len(a["srcset"]))
-            yield pd.DataFrame(rows)
+    def row(i, text, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        # words are ATTRIBUTE content: escape &/'/< so a word
+        # containing the quote delimiter cannot truncate the
+        # attribute (the kernel decodes entities back, so the
+        # parsed alt equals the raw words — what the oracle emits)
+        w = [
+            x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
+            for x in first_words(text, 4)
+        ]
+        html = (
+            "<html><body>"
+            "<nav><img src='/logo.png' alt='logo'></nav>"
+            f"<main><img src='/img/{i}.jpg' alt='{w[0]} {w[1]}'"
+            f" srcset='/img/{i}-1x.jpg 1x, /img/{i}-2x.jpg 2x'>"
+            f"<img src='/img/{i}.png' alt='{w[2]} {w[3]}'></main>"
+            "</body></html>"
+        )
+        for pos, a in enumerate(extract_html_assets(html)):
+            if a["src"]:
+                yield (i, pos, resolve_link(url, a["src"]), a["alt"],
+                       a["chrome"], len(a["srcset"]))
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, pos int, src string, alt string, "
-                "chrome boolean, srcset_n int"),
+    return arrow_map(
+        docs, row,
+        ("doc_id long, pos int, src string, alt string, "
+         "chrome boolean, srcset_n int"),
     )
 
 
@@ -297,42 +256,28 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-frontier feed: sitemap XML entries (loc/lastmod/priority) per
     host, parsed with the total sitemap scanner — the seed list crawlers
     refresh frontiers from. One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..sources.sitemap import parse_sitemap
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "text", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "loc": [], "lastmod": [],
-                    "priority": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                xml = (
-                    "<?xml version='1.0'?><urlset>"
-                    f"<url><loc>https://{source}.example.com/{w[0]}</loc>"
-                    f"<lastmod>2025-01-0{1 + i % 9}</lastmod>"
-                    f"<priority>0.{i % 10}</priority></url>"
-                    f"<url><loc>https://{source}.example.com/{w[1]}</loc></url>"
-                    "</urlset>"
-                )
-                for pos, e in enumerate(parse_sitemap(xml)["entries"]):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["loc"].append(e["loc"])
-                    rows["lastmod"].append(e["lastmod"])
-                    rows["priority"].append(e["priority"])
-            yield pd.DataFrame(rows)
+    def row(i, text, source):
+        w = first_words(text, 2)
+        xml = (
+            "<?xml version='1.0'?><urlset>"
+            f"<url><loc>https://{source}.example.com/{w[0]}</loc>"
+            f"<lastmod>2025-01-0{1 + i % 9}</lastmod>"
+            f"<priority>0.{i % 10}</priority></url>"
+            f"<url><loc>https://{source}.example.com/{w[1]}</loc></url>"
+            "</urlset>"
+        )
+        for pos, e in enumerate(parse_sitemap(xml)["entries"]):
+            yield i, pos, e["loc"], e["lastmod"], e["priority"]
 
-    return docs.mapInPandas(
-        gen,
-        schema=("doc_id long, pos int, loc string, lastmod string, "
-                "priority double"),
+    return arrow_map(
+        docs, row,
+        "doc_id long, pos int, loc string, lastmod string, priority double",
     )
 
 
@@ -357,38 +302,26 @@ def q_robots_allowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule wins, allow wins ties). At 10^12 docs this is the broadcast policy
     side of a frontier join; here the verdicts themselves are value-checked.
     One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.robots import is_allowed, parse_robots
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "text"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "path": [], "allowed": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                w = first_words(text, 2)
-                robots = (
-                    "User-agent: *\n"
-                    "Disallow: /private/\n"
-                    f"Allow: /private/{w[0]}\n"
-                )
-                rules = parse_robots(robots)
-                for pos, path in enumerate(
-                    (f"/{w[0]}", f"/private/{w[0]}", f"/private/{w[1]}")
-                ):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["path"].append(path)
-                    rows["allowed"].append(is_allowed(rules, "anybot", path))
-            yield pd.DataFrame(rows)
+    def row(i, text):
+        w = first_words(text, 2)
+        robots = (
+            "User-agent: *\n"
+            "Disallow: /private/\n"
+            f"Allow: /private/{w[0]}\n"
+        )
+        rules = parse_robots(robots)
+        for pos, path in enumerate(
+            (f"/{w[0]}", f"/private/{w[0]}", f"/private/{w[1]}")
+        ):
+            yield i, pos, path, is_allowed(rules, "anybot", path)
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, path string, allowed boolean"
-    )
+    return arrow_map(docs, row, "doc_id long, pos int, path string, allowed boolean")
 
 
 SQL_ROBOTS_ALLOWED = """
@@ -411,61 +344,47 @@ def q_feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     host — the channel news crawls find fresh documents through. Docs
     alternate between an RSS 2.0 and an Atom rendering of the same two
     entries, so both dialects are value-checked. One Arrow pass."""
-    import pandas as pd
-
     from ..sources.feeds import parse_feed
 
     docs = spread_docs(spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")).select(
         "doc_id", "text", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "kind": [], "title": [],
-                    "link": []}
-            for doc_id, text, source in zip(pdf["doc_id"], pdf["text"],
-                                            pdf["source"]):
-                i = int(doc_id)
-                # words land in XML text AND the Atom href ATTRIBUTE: a
-                # quote in a word truncated the single-quoted href (the
-                # 300-doc parity soak caught it); entity-escape &/'/< —
-                # the parser decodes them back, so parsed values equal
-                # the raw words the oracle emits
-                w = [
-                    x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
-                    for x in first_words(text, 2)
-                ]
-                base = f"https://{source}.example.com"
-                if i % 2 == 0:
-                    xml = (
-                        "<rss version='2.0'><channel><title>c</title>"
-                        f"<item><title>{w[0]}</title>"
-                        f"<link>{base}/{w[0]}</link></item>"
-                        f"<item><title>{w[1]}</title>"
-                        f"<link>{base}/{w[1]}</link></item>"
-                        "</channel></rss>"
-                    )
-                else:
-                    xml = (
-                        "<feed><title>c</title>"
-                        f"<entry><title>{w[0]}</title>"
-                        f"<link href='{base}/{w[0]}'/></entry>"
-                        f"<entry><title>{w[1]}</title>"
-                        f"<link href='{base}/{w[1]}'/></entry>"
-                        "</feed>"
-                    )
-                parsed = parse_feed(xml)
-                for pos, e in enumerate(parsed["entries"]):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["kind"].append(parsed["kind"])
-                    rows["title"].append(e["title"])
-                    rows["link"].append(e["link"])
-            yield pd.DataFrame(rows)
+    def row(i, text, source):
+        # words land in XML text AND the Atom href ATTRIBUTE: a
+        # quote in a word truncated the single-quoted href (the
+        # 300-doc parity soak caught it); entity-escape &/'/< —
+        # the parser decodes them back, so parsed values equal
+        # the raw words the oracle emits
+        w = [
+            x.replace("&", "&amp;").replace("'", "&#39;").replace("<", "&lt;")
+            for x in first_words(text, 2)
+        ]
+        base = f"https://{source}.example.com"
+        if i % 2 == 0:
+            xml = (
+                "<rss version='2.0'><channel><title>c</title>"
+                f"<item><title>{w[0]}</title>"
+                f"<link>{base}/{w[0]}</link></item>"
+                f"<item><title>{w[1]}</title>"
+                f"<link>{base}/{w[1]}</link></item>"
+                "</channel></rss>"
+            )
+        else:
+            xml = (
+                "<feed><title>c</title>"
+                f"<entry><title>{w[0]}</title>"
+                f"<link href='{base}/{w[0]}'/></entry>"
+                f"<entry><title>{w[1]}</title>"
+                f"<link href='{base}/{w[1]}'/></entry>"
+                "</feed>"
+            )
+        parsed = parse_feed(xml)
+        for pos, e in enumerate(parsed["entries"]):
+            yield i, pos, parsed["kind"], e["title"], e["link"]
 
-    return docs.mapInPandas(
-        gen,
-        schema="doc_id long, pos int, kind string, title string, link string",
+    return arrow_map(
+        docs, row, "doc_id long, pos int, kind string, title string, link string"
     )
 
 
@@ -486,7 +405,7 @@ def _robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle can restate. The table is tiny (|hosts| × |paths|), so
     the frontier broadcasts it; at 10^12 docs the policy side stays
     per-host — millions of rows, still broadcast range."""
-    import pandas as pd
+    from ..kernels.robots import is_allowed, parse_robots
 
     hosts = (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
@@ -494,28 +413,18 @@ def _robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    def gen(batches):
-        from ..kernels.robots import is_allowed, parse_robots
+    def row(s):
+        s = str(s)
+        # FIRST digit run, like the oracle's regexp_extract — a
+        # host like 'a1b2' must not read '12' here and '1' there
+        m = _re.search(r"[0-9]+", s)
+        d = int(m.group()) if m else 1  # digitless -> odd -> allow
+        robots = "User-agent: *\n" + ("Disallow: /about\n" if d % 2 == 0 else "")
+        rules = parse_robots(robots)
+        for p in ("/", "/about"):
+            yield f"{s}.example.com", p, is_allowed(rules, "anybot", p)
 
-        for pdf in batches:
-            rows = {"host": [], "path": [], "allowed": []}
-            for s in pdf["source"]:
-                s = str(s)
-                # FIRST digit run, like the oracle's regexp_extract — a
-                # host like 'a1b2' must not read '12' here and '1' there
-                m = _re.search(r"[0-9]+", s)
-                d = int(m.group()) if m else 1  # digitless -> odd -> allow
-                robots = "User-agent: *\n" + (
-                    "Disallow: /about\n" if d % 2 == 0 else ""
-                )
-                rules = parse_robots(robots)
-                for p in ("/", "/about"):
-                    rows["host"].append(f"{s}.example.com")
-                    rows["path"].append(p)
-                    rows["allowed"].append(is_allowed(rules, "anybot", p))
-            yield pd.DataFrame(rows)
-
-    return hosts.mapInPandas(gen, "host string, path string, allowed boolean")
+    return arrow_map(hosts, row, "host string, path string, allowed boolean")
 
 
 def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,8 +486,6 @@ def q_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     rss+xml|atom+xml>` declarations per page, resolved against the doc URL
     — the hook that connects page crawling to the feed source
     (:mod:`..sources.feeds`). One Arrow pass, zero shuffle."""
-    import pandas as pd
-
     from ..kernels.html_extract import extract_feed_links
     from ..kernels.urlnorm import resolve_link
 
@@ -586,30 +493,20 @@ def q_feed_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source"
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "feed_url": [], "kind": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                url = f"https://{source}.example.com/doc/{i}"
-                html = (
-                    "<html><head>"
-                    "<link rel='alternate' type='application/rss+xml'"
-                    " href='/feed.xml'>"
-                    + ("<link rel='alternate' type='application/atom+xml'"
-                       " href='/atom.xml'>" if i % 2 == 0 else "")
-                    + "</head><body><p>x</p></body></html>"
-                )
-                for pos, f in enumerate(extract_feed_links(html)):
-                    rows["doc_id"].append(i)
-                    rows["pos"].append(pos)
-                    rows["feed_url"].append(resolve_link(url, f["href"]))
-                    rows["kind"].append(f["kind"])
-            yield pd.DataFrame(rows)
+    def row(i, source):
+        url = f"https://{source}.example.com/doc/{i}"
+        html = (
+            "<html><head>"
+            "<link rel='alternate' type='application/rss+xml'"
+            " href='/feed.xml'>"
+            + ("<link rel='alternate' type='application/atom+xml'"
+               " href='/atom.xml'>" if i % 2 == 0 else "")
+            + "</head><body><p>x</p></body></html>"
+        )
+        for pos, f in enumerate(extract_feed_links(html)):
+            yield i, pos, resolve_link(url, f["href"]), f["kind"]
 
-    return docs.mapInPandas(
-        gen, schema="doc_id long, pos int, feed_url string, kind string"
-    )
+    return arrow_map(docs, row, "doc_id long, pos int, feed_url string, kind string")
 
 
 SQL_FEED_DISCOVERY = """
@@ -824,7 +721,7 @@ def q_robots_crawl_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sitemap lines). The scheduler joins this tiny per-host table broadcast
     against the frontier to budget fetch slots. One Arrow pass over the
     distinct hosts, zero shuffle."""
-    import pandas as pd
+    from ..kernels.robots import parse_robots
 
     hosts = (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
@@ -832,38 +729,21 @@ def q_robots_crawl_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    def gen(batches):
-        from ..kernels.robots import parse_robots
+    def row(s):
+        s = str(s)
+        m = _re.search(r"[0-9]+", s)
+        d = int(m.group()) if m else 0  # first run, like the oracle
+        robots = "User-agent: *\n"
+        if d % 5:
+            robots += f"Crawl-delay: {d % 5}\n"
+        for k in range(1 + d % 2):
+            robots += f"Sitemap: https://{s}.example.com/sitemap{k}.xml\n"
+        parsed = parse_robots(robots)
+        delay = parsed["crawl_delay"].get("*")
+        yield (f"{s}.example.com", None if delay is None else float(delay),
+               len(parsed["sitemaps"]))
 
-        for pdf in batches:
-            rows = {"host": [], "crawl_delay": [], "n_sitemaps": []}
-            for s in pdf["source"]:
-                s = str(s)
-                m = _re.search(r"[0-9]+", s)
-                d = int(m.group()) if m else 0  # first run, like the oracle
-                robots = "User-agent: *\n"
-                if d % 5:
-                    robots += f"Crawl-delay: {d % 5}\n"
-                for k in range(1 + d % 2):
-                    robots += f"Sitemap: https://{s}.example.com/sitemap{k}.xml\n"
-                parsed = parse_robots(robots)
-                delay = parsed["crawl_delay"].get("*")
-                rows["host"].append(f"{s}.example.com")
-                rows["crawl_delay"].append(
-                    None if delay is None else float(delay)
-                )
-                rows["n_sitemaps"].append(len(parsed["sitemaps"]))
-            yield pd.DataFrame(
-                {
-                    "host": rows["host"],
-                    "crawl_delay": pd.array(rows["crawl_delay"], dtype="float64"),
-                    "n_sitemaps": pd.array(rows["n_sitemaps"], dtype="int32"),
-                }
-            )
-
-    return hosts.mapInPandas(
-        gen, schema="host string, crawl_delay double, n_sitemaps int"
-    )
+    return arrow_map(hosts, row, "host string, crawl_delay double, n_sitemaps int")
 
 
 SQL_ROBOTS_CRAWL_DELAY = """
@@ -904,46 +784,39 @@ def q_redirect_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "status": [], "target": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                i = int(doc_id)
-                lane = i % 3
-                if lane == 0:
-                    status, loc = 301, b"/moved/%d" % i
-                elif lane == 1:
-                    status, loc = 302, b"https://hub.example.com/r/%d" % i
-                else:
-                    status, loc = 200, None
-                head = b"HTTP/1.1 %d X\r\n" % status
-                if loc is not None:
-                    head += b"Location: %s\r\n" % loc
-                http = head + b"Content-Type: text/html\r\n\r\nx"
-                uri = "https://%s.example.com/doc/%d" % (source, i)
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: response\r\n"
-                    b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
-                    b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
-                    b"WARC-Target-URI: %s\r\n"
-                    b"Content-Length: %d\r\n\r\n"
-                    % (i, uri.encode(), len(http))
-                ) + http + b"\r\n\r\n"
-                for headers, payload in iter_warc_records(io.BytesIO(rec)):
-                    st, _ct = http_envelope_meta(payload)
-                    location = http_header(payload, "location")
-                    target = (
-                        resolve_link(headers.get("warc-target-uri", uri), location)
-                        if location and st and 300 <= st < 400
-                        else None
-                    )
-                    rows["doc_id"].append(i)
-                    rows["status"].append(st)
-                    rows["target"].append(target)
-            yield pd.DataFrame(rows)
+    def row(i, source):
+        lane = i % 3
+        if lane == 0:
+            status, loc = 301, b"/moved/%d" % i
+        elif lane == 1:
+            status, loc = 302, b"https://hub.example.com/r/%d" % i
+        else:
+            status, loc = 200, None
+        head = b"HTTP/1.1 %d X\r\n" % status
+        if loc is not None:
+            head += b"Location: %s\r\n" % loc
+        http = head + b"Content-Type: text/html\r\n\r\nx"
+        uri = "https://%s.example.com/doc/%d" % (source, i)
+        rec = (
+            b"WARC/1.0\r\n"
+            b"WARC-Type: response\r\n"
+            b"WARC-Record-ID: <urn:uuid:%032d>\r\n"
+            b"WARC-Date: 2025-01-01T00:00:00Z\r\n"
+            b"WARC-Target-URI: %s\r\n"
+            b"Content-Length: %d\r\n\r\n"
+            % (i, uri.encode(), len(http))
+        ) + http + b"\r\n\r\n"
+        for headers, payload in iter_warc_records(io.BytesIO(rec)):
+            st, _ct = http_envelope_meta(payload)
+            location = http_header(payload, "location")
+            target = (
+                resolve_link(headers.get("warc-target-uri", uri), location)
+                if location and st and 300 <= st < 400
+                else None
+            )
+            yield i, st, target
 
-    return docs.mapInPandas(gen, schema="doc_id long, status int, target string")
+    return arrow_map(docs, row, "doc_id long, status int, target string")
 
 
 SQL_REDIRECT_MAP = """

@@ -159,7 +159,7 @@ def _unpivot(df: DataFrame, part: str, keys: list, vals: list) -> DataFrame:
     # single pass over the part: one explode of an in-row (column, v_str,
     # v_num) struct array — a union branch per value column would re-execute
     # the part's whole subtree once per column, and the shuffle-free
-    # mapInPandas parts (docmeta/crawl extraction) have no exchange for
+    # Python map parts (docmeta/crawl extraction) have no exchange for
     # Spark to reuse, so full document extraction would run 2-4x per part
     key = F.concat_ws(
         "|", *[F.coalesce(F.col(c).cast("string"), F.lit("∅")) for c in keys]

@@ -12,6 +12,9 @@ No per-row Python crosses the JVM boundary outside the Arrow batch path;
 kernels initialize once per partition (scalar-iterator form). The salt term
 splits pathological hosts (a single domain holding 30% of a 10^12-row corpus)
 across ``salt`` partitions while keeping host locality for everything else.
+
+The per-row operator and source stages run through :func:`arrow_map`, so
+this module alone owns the Arrow batch format of every Python map stage.
 """
 
 from __future__ import annotations
@@ -77,8 +80,10 @@ def _iter_binary_views(arr):
     """Zero-copy per-row ``memoryview`` slices of an Arrow binary array
     (VERDICT r3 item 1: ``to_pylist()`` wrote a full heap copy of every
     payload before the kernel even saw it — on the bandwidth-bound
-    extraction stage that is pure memory traffic). Falls back to ``as_py``
-    for nulls/unexpected layouts."""
+    extraction stage that is pure memory traffic). Views are unsigned
+    (``'B'``), like ``bytes``: a signed view makes ``payload[i]`` negative
+    for bytes >= 0x80 and ``view[:2] == b"\\x1f\\x8b"`` never true. Falls
+    back to ``as_py`` for nulls/unexpected layouts."""
     import pyarrow as pa
 
     if arr.null_count == 0 and pa.types.is_binary(arr.type):
@@ -88,12 +93,48 @@ def _iter_binary_views(arr):
         offs = np.frombuffer(
             bufs[1], dtype=np.int32, count=len(arr) + 1, offset=arr.offset * 4
         )
-        mv = memoryview(bufs[2])
+        mv = memoryview(bufs[2]).cast("B")
         for i in range(len(arr)):
             yield mv[offs[i] : offs[i + 1]]
     else:
         for v in arr:
             yield v.as_py()
+
+
+def arrow_map(df: DataFrame, row_fn, schema: str) -> DataFrame:
+    """Run ``row_fn`` over every row of ``df`` in one ``mapInArrow`` pass.
+
+    ``row_fn(*row)`` receives the input columns in ``df`` order — binary
+    columns as zero-copy views (:func:`_iter_binary_views`), all others as
+    Python values — and yields zero or more output tuples in the column
+    order of the DDL string ``schema``. Each input Arrow batch becomes one
+    output batch, its columns built straight from the tuples with no pandas
+    round-trip; ``from_pandas=True`` keeps NaN → null, as under
+    ``mapInPandas``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+
+    def _map_batches(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            cols = [
+                _iter_binary_views(c) if pa.types.is_binary(c.type) else c.to_pylist()
+                for c in batch.columns
+            ]
+            out = [t for row in zip(*cols) for t in row_fn(*row)]
+            out_cols = zip(*out) if out else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(c, f.type, from_pandas=True)
+                    for c, f in zip(out_cols, arrow_schema)
+                ],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(_map_batches, struct)
 
 
 def _make_extract_batches(keep_cols: tuple[str, ...] = ()):
@@ -210,9 +251,3 @@ def extract_corpus(
     )
     return pruned.mapInArrow(_make_extract_batches(keep_cols), schema=schema)
 
-
-def write_sink(result: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet sink in an Iceberg-compatible layout (S6 analog —
-    hybrid_docling_gpt4_processor.py:692-693 wrote one JSON per doc; we
-    append to a table instead)."""
-    result.write.mode(mode).parquet(path)

@@ -121,31 +121,23 @@ def parse_feed(payload: bytes | str) -> dict:
 def read_feeds(spark, paths: list[str], partitions: int | None = None):
     """DataFrame of ``(feed_path, kind, feed_title, title, link, published,
     entry_id)`` — one row per entry, parsed on executors."""
-    import pandas as pd  # noqa: F401
+    from ..pipeline import arrow_map
 
     n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
     paths_df = spark.createDataFrame(
         [(p,) for p in paths], "path string"
     ).repartition(n)
 
-    def _parse(batches):
-        import pandas as pd
+    def _parse(p):
+        with open(p, "rb") as f:
+            parsed = parse_feed(f.read())
+        for e in parsed["entries"]:
+            yield (p, parsed["kind"], parsed["title"], e["title"], e["link"],
+                   e["published"], e["entry_id"])
 
-        cols = ["feed_path", "kind", "feed_title", "title", "link",
-                "published", "entry_id"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    parsed = parse_feed(f.read())
-                for e in parsed["entries"]:
-                    out.append({"feed_path": p, "kind": parsed["kind"],
-                                "feed_title": parsed["title"], **e})
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df.mapInPandas(
-        _parse,
-        schema=("feed_path string, kind string, feed_title string, "
-                "title string, link string, published string, "
-                "entry_id string"),
+    return arrow_map(
+        paths_df, _parse,
+        ("feed_path string, kind string, feed_title string, "
+         "title string, link string, published string, "
+         "entry_id string"),
     )

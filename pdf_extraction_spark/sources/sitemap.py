@@ -94,29 +94,22 @@ def parse_sitemap(payload: bytes | str) -> dict:
 def read_sitemaps(spark, paths: list[str], partitions: int | None = None):
     """DataFrame of ``(sitemap_path, kind, loc, lastmod, changefreq,
     priority)`` — one row per entry, parsed on executors."""
-    import pandas as pd  # noqa: F401
+    from ..pipeline import arrow_map
 
     n = max(1, partitions or min(len(paths), spark.sparkContext.defaultParallelism))
     paths_df = spark.createDataFrame(
         [(p,) for p in paths], "path string"
     ).repartition(n)
 
-    def _parse(batches):
-        import pandas as pd
+    def _parse(p):
+        with open(p, "rb") as f:
+            parsed = parse_sitemap(f.read())
+        for e in parsed["entries"]:
+            yield (p, parsed["kind"], e["loc"], e["lastmod"], e["changefreq"],
+                   e["priority"])
 
-        cols = ["sitemap_path", "kind", "loc", "lastmod", "changefreq",
-                "priority"]
-        for pdf in batches:
-            out: list[dict] = []
-            for p in pdf["path"]:
-                with open(p, "rb") as f:
-                    parsed = parse_sitemap(f.read())
-                for e in parsed["entries"]:
-                    out.append({"sitemap_path": p, "kind": parsed["kind"], **e})
-            yield pd.DataFrame(out, columns=cols)
-
-    return paths_df.mapInPandas(
-        _parse,
-        schema=("sitemap_path string, kind string, loc string, "
-                "lastmod string, changefreq string, priority double"),
+    return arrow_map(
+        paths_df, _parse,
+        ("sitemap_path string, kind string, loc string, "
+         "lastmod string, changefreq string, priority double"),
     )

@@ -190,26 +190,20 @@ def q_wet_roundtrip(spark, sf_dir: str):
     ``documents.text`` byte-identically per url. The r3 pin was
     golden-test-only; this runs the full serialize/parse cycle inside the
     DuckDB-checked correctness gate."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-
     from ..corpus import corpus_from_documents
-    from ..pipeline import extract_corpus
+    from ..pipeline import arrow_map, extract_corpus
 
     corpus = corpus_from_documents(spark, sf_dir, payload="html")
     extracted = extract_corpus(corpus, repartition=False)
     segs = to_wet_segments(extracted)
 
-    def _back(batches):
-        cols = ["url", "extracted_text"]
-        for pdf in batches:
-            out = []
-            for blob in pdf["wet_gz"]:
-                for row in parse_wet_bytes(bytes(blob)):
-                    out.append({"url": row["url"], "extracted_text": row["text"]})
-            yield pd.DataFrame(out, columns=cols)
+    def _back(blob):
+        for row in parse_wet_bytes(bytes(blob)):
+            yield row["url"], row["text"]
 
-    return segs.mapInPandas(_back, schema="url string, extracted_text string")
+    return arrow_map(
+        segs.select("wet_gz"), _back, "url string, extracted_text string"
+    )
 
 
 SQL_WET_ROUNDTRIP = """

@@ -99,6 +99,70 @@ def test_iter_binary_views_zero_copy_and_fallbacks():
     ] == vals
 
 
+@pytest.mark.parametrize(
+    "rows, in_ddl, row_fn, out_ddl, want",
+    [
+        pytest.param([(1,), (2,), (3,)], "k long", lambda k: [(k, None if k == 2 else k * 10)],
+                     "k long, v int",
+                     [(1, 10), (2, None), (3, 30)], id="nullable_int"),
+        pytest.param([(1,), (2,), (3,)], "k long",
+                     lambda k: [(k, float("nan") if k == 1 else None if k == 2 else k / 2)],
+                     "k long, v double",
+                     [(1, None), (2, None), (3, 1.5)], id="nan_and_none_to_null"),
+        # range(8) over 2 partitions: the second batch (4..7) yields nothing
+        pytest.param(None, None, lambda k: [(k,)] if k < 4 and k % 2 == 0 else [],
+                     "k long",
+                     [(0,), (2,)], id="empty_rows_and_empty_batch"),
+        pytest.param([(1,), (3,)], "k long", lambda k: [(k, j, f"{k}.{j}") for j in range(k)],
+                     "k long, j int, s string",
+                     [(1, 0, "1.0"), (3, 0, "3.0"), (3, 1, "3.1"), (3, 2, "3.2")],
+                     id="fan_out"),
+        pytest.param([(1, b"\xef\xbb\xbfx"), (2, b"\x1f\x8b\x08")], "k long, b binary",
+                     lambda k, b: [(k, b[0], bytes(b).hex(), b[:2] == b"\x1f\x8b",
+                                    isinstance(b, memoryview))],
+                     "k long, b0 int, hex string, gz boolean, view boolean",
+                     [(1, 0xEF, "efbbbf78", False, True), (2, 0x1F, "1f8b08", True, True)],
+                     id="binary_high_first_byte"),
+    ],
+)
+def test_arrow_map(spark, rows, in_ddl, row_fn, out_ddl, want):
+    """``arrow_map`` builds typed Arrow columns straight from the row
+    function's tuples: nulls survive, NaN becomes null as under
+    mapInPandas, rows and whole batches may yield nothing, one row may fan
+    out to many, and binary columns arrive as unsigned zero-copy views."""
+    from pdf_extraction_spark.pipeline import arrow_map
+
+    df = (spark.range(8, numPartitions=2) if rows is None
+          else spark.createDataFrame(rows, in_ddl))
+    out = arrow_map(df, row_fn, out_ddl)
+    assert sorted(tuple(r) for r in out.collect()) == want
+
+
+def test_high_first_byte_payloads_match_direct_kernel(spark):
+    """Payloads whose first byte is >= 0x80 (a UTF-8 BOM page, a gzip-
+    wrapped page) must extract through the zero-copy Spark path exactly as
+    the kernel extracts their bytes directly. Signed memoryviews used to
+    raise in the whitespace sniff and skip the gzip unwrap."""
+    import gzip
+
+    from pdf_extraction_spark.kernels.dispatch import extract_document
+
+    page = "<html><body><main><p>Grüße aus dem Stadtpark, ein ganzer Absatz.</p></main></body></html>"
+    payloads = {
+        "https://bom.example/a": b"\xef\xbb\xbf" + page.encode("utf-8"),
+        "https://gz.example/b": gzip.compress(page.encode("utf-8"), mtime=0),
+    }
+    df = spark.createDataFrame(list(payloads.items()), "url string, html binary")
+    out = {r["url"]: r for r in extract_corpus(df, partitions=2).collect()}
+    for url, payload in payloads.items():
+        want = extract_document(payload)
+        assert want["method"] == "html" and want["text"]
+        got = out[url]
+        assert (got["extracted_text"], got["method"], got["error"], got["n_elements"]) == (
+            want["text"], want["method"], want["error"], want["n_elements"]
+        ), url
+
+
 def test_legacy_lane_excludes_c1_codepoints(spark, tmp_path):
     """The undeclared-ISO-8859-1 lane of corpus_from_documents must skip any
     doc whose text carries C1 controls U+0080-U+009F: latin-1 encodes them

@@ -117,3 +117,28 @@ def test_resume_with_different_bucket_grid_refuses(spark, tmp_path):
     # same grid resumes cleanly and skips all done buckets
     s = run_resumable(corpus, out, n_buckets=8)
     assert s["buckets_run"] == 0 and s["resumed"]
+
+
+def test_empty_first_wave_commits_every_bucket(spark, tmp_path):
+    """A wave whose buckets hold no documents writes nothing to ``docs/``;
+    the metrics read-back must still work (it used to raise
+    AnalysisException on the empty sink) and every bucket must get a
+    ``done`` row with its true document count."""
+    urls = [f"https://solo.example/doc/{i}" for i in range(5)]
+    corpus = spark.createDataFrame(
+        [(u, None, b"<html><body><p>solo host page</p></body></html>", None, None)
+         for u in urls],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    (host_bucket,) = {
+        r["b"] for r in corpus.select(lineage.bucket_col(N_BUCKETS).alias("b")).collect()
+    }
+    assert host_bucket != 0  # the first pending wave (bucket 0) is empty
+    out = str(tmp_path / "solo")
+    s = lineage.run_resumable(corpus, out, n_buckets=N_BUCKETS, partitions=2, wave_size=1)
+    assert s["buckets_run"] == N_BUCKETS and s["n_docs"] == len(urls)
+    done = {
+        r["bucket"]: r["n_docs"]
+        for r in lineage.read_lineage(spark, out).filter("status = 'done'").collect()
+    }
+    assert done == {b: (len(urls) if b == host_bucket else 0) for b in range(N_BUCKETS)}

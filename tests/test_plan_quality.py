@@ -3,11 +3,21 @@ actually appear in the executed plans (broadcast, pushdown, partial agg,
 whole-stage codegen). These catch regressions where a refactor silently
 turns a broadcast join into a shuffle or drops a pushed filter."""
 
+import re
+
 import pytest
 
 from pdf_extraction_spark.operators import dedup, relational, similarity
 
 SF = "/root/testdata/sf0.001"
+
+# physical-plan nodes that run Python code
+_PY_NODE = re.compile(
+    r"\b(MapInArrow|MapInPandas|PythonMapInArrow|ArrowEvalPython|BatchEvalPython|"
+    r"FlatMapGroupsInPandas|FlatMapGroupsInArrow|FlatMapCoGroupsInPandas|"
+    r"FlatMapCoGroupsInArrow|AggregateInPandas|ArrowAggregatePython|"
+    r"WindowInPandas|ArrowWindowPython|PythonUDTF|ArrowEvalPythonUDTF)\b"
+)
 
 
 def plan_of(df, execute: bool = False) -> str:
@@ -172,6 +182,16 @@ def test_redirect_map_zero_shuffle(spark):
     from pdf_extraction_spark.operators import links
 
     plan = plan_of(links.q_redirect_map(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan
+    assert _PY_NODE.findall(plan) == ["MapInArrow"]
     assert "ENSURE_REQUIREMENTS" not in plan
+
+
+@pytest.mark.parametrize("suite, n_python", [("q_docmeta_suite", 15), ("q_crawl_suite", 12)])
+def test_doc_suites_python_stage_count(spark, suite, n_python):
+    """The docmeta and crawl suites keep exactly their Python exec nodes:
+    one Arrow pass per extracting part, plus the PDF-rendering pandas UDF. A port
+    that splits a part into two Python stages, or reintroduces a pandas
+    stage beside one, moves the count."""
+    from pdf_extraction_spark.operators import suites
+
+    assert len(_PY_NODE.findall(plan_of(getattr(suites, suite)(spark, SF)))) == n_python
